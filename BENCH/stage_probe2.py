@@ -90,8 +90,13 @@ def main() -> None:
     # --- payload internals (doc side only, 18k rows) ---
     npfx = F.substring("doc_text", 1, FT.NGRAM_PREFIX_CAP)
     from lab02_citation_matching_and_entity_resolution_spark.operators.blocking import (
-        shingle_expr_on,
+        clean_for_shingles,
+        shingle_expr_cleaned,
     )
+
+    def shingles_inline(col, n):
+        # cleaning inlined into the shingle lambda (the pre-round-7 shape)
+        return shingle_expr_cleaned(clean_for_shingles(col), n)
 
     def hashed(arr):
         return F.transform(arr, lambda s: F.xxhash64(s))
@@ -109,15 +114,15 @@ def main() -> None:
     ))
     probe("payload_sh_only", lambda: docs.select(
         "conv_id",
-        *[hashed(shingle_expr_on(npfx, n)).alias(f"sh{n}") for n in (3, 4, 5)],
+        *[hashed(shingles_inline(npfx, n)).alias(f"sh{n}") for n in (3, 4, 5)],
     ))
     probe("payload_sh3_only", lambda: docs.select(
-        "conv_id", hashed(shingle_expr_on(npfx, 3)).alias("sh3"),
+        "conv_id", hashed(shingles_inline(npfx, 3)).alias("sh3"),
     ))
     probe("payload_shnsh", lambda: docs.select(
         "conv_id",
-        *[hashed(shingle_expr_on(npfx, n)).alias(f"sh{n}") for n in (3, 4, 5)],
-        *[F.size(shingle_expr_on(npfx, n)).alias(f"nsh{n}") for n in (3, 4, 5)],
+        *[hashed(shingles_inline(npfx, n)).alias(f"sh{n}") for n in (3, 4, 5)],
+        *[F.size(shingles_inline(npfx, n)).alias(f"nsh{n}") for n in (3, 4, 5)],
     ))
     probe("payload_full", lambda: doc_payload(docs))
 

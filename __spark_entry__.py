@@ -30,16 +30,17 @@ def entry(spark: SparkSession) -> DataFrame:
     documents table.
 
     The within-block self-join rides the engine's skew-cap discipline
-    (blocking._cap_block): at most ``_ENTRY_BLOCK_CAP`` docs per (lang,
-    source) block, md5/xxhash-ranked deterministically — the same rule every
-    dedup operator enforces (no uncapped within-block cross join anywhere,
-    including this demo).  At sf0.001 every block is far below the cap, so
+    (blocking.cap_block): at most ``_ENTRY_BLOCK_CAP`` docs per (lang,
+    source) block, ranked deterministically by xxhash64(doc_id, 23120334) as
+    in the ER blocking passes — the same cap rule every dedup operator
+    enforces (no uncapped within-block cross join anywhere, including this
+    demo).  At sf0.001 every block is far below the cap, so
     the output is identical to the uncapped join (pinned by test).
     """
     from pyspark.sql import functions as F
 
     from lab02_citation_matching_and_entity_resolution_spark.operators.blocking import (
-        _cap_block,
+        cap_block,
     )
     from lab02_citation_matching_and_entity_resolution_spark.operators.features import (
         jaccard_col,
@@ -64,7 +65,9 @@ def entry(spark: SparkSession) -> DataFrame:
             F.coalesce(F.col("source"), F.lit("\x00")),
         ),
     )
-    capped, _ = _cap_block(keyed, "_blk", _ENTRY_BLOCK_CAP, seed=23120334, id_col="doc_id")
+    capped, _ = cap_block(
+        keyed, ["_blk"], "doc_id", _ENTRY_BLOCK_CAP, F.xxhash64("doc_id", F.lit(23120334))
+    )
     capped = capped.drop("_blk")
     a = capped.select(
         "lang",

@@ -10,11 +10,12 @@ candidate pairs —
                      the analogue of the reference's arxiv_exact short-circuit
                      join, :446-448)
   pass "signature" : role/tool multiset + turn-count bucket (structural key)
-  pass "minhash"   : MinHash-LSH over char-shingle sets of doc_text
-                     (approxSimilarityJoin; recall extender)
+  pass "minhash"   : MinHash-LSH bands over the token sets (recall extender)
 
-Every pass produces canonical (left_id < right_id) pairs; passes are
-deduplicated with one distinct.  Skew: any block larger than ``block_cap``
+Every pass yields (conv_id, block_key) rows (_keyed_passes); the pair-list
+form self-joins them into canonical (left_id < right_id) pairs and dedups
+the passes with one groupBy, the fused form (fused.py) scores inside the
+same self-join.  Skew: any block larger than ``block_cap``
 is capped BEFORE the self-join by a deterministic hash-ranked row_number —
 order-free (no rand(); reference's random.sample is row-order dependent, see
 SURVEY §7.4.4) — and every cap event is counted into a metrics DataFrame (no
@@ -22,12 +23,13 @@ silent truncation).
 
 Scale notes: the self-join per pass shuffles on block_key; the cap bounds the
 worst block to cap^2/2 pairs.  AQE skew-join splits residual imbalance.  The
-LSH pass's join is bucketed by (band hash) — bounded fan-out by construction.
+LSH pass keys by (band, band hash) — bounded fan-out by construction.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,46 +42,45 @@ class BlockingConfig:
     token_prefix_len: int = 48      # chars of normalized doc_text in the token key
     block_cap: int = DEFAULT_BLOCK_CAP
     seed: int = 23120334
-    minhash_enabled: bool = True
-    shingle_len: int = 5
     minhash_tables: int = 6         # LSH bands
     minhash_rows: int = 4           # minhashes per band (s-curve knee ~0.64)
     passes: tuple[str, ...] = ("token", "signature", "minhash")
 
 
-def _canonical_pairs(joined: DataFrame, pass_name: str) -> DataFrame:
-    return joined.select(
-        F.least("l_id", "r_id").alias("left_id"),
-        F.greatest("l_id", "r_id").alias("right_id"),
-        F.lit(pass_name).alias("block_pass"),
-        "block_key",
-    ).where(F.col("left_id") != F.col("right_id"))
-
-
-def _cap_block(
-    df: DataFrame, key: str, cap: int, seed: int, id_col: str = "conv_id"
+def cap_block(
+    df: DataFrame, block_cols: list[str], id_col: str, cap: int, rank: F.Column
 ) -> tuple[DataFrame, DataFrame]:
-    """Deterministically keep at most ``cap`` rows per block key.
+    """Deterministically keep at most ``cap`` rows per block.
 
-    Ranking is by xxhash64(id, seed) — stable under any partitioning/row
-    order, unlike rand().  Returns (capped_df, cap_metrics_df).
+    Rows are ranked inside each block by (``rank``, id).  The rank is a hash
+    of the id, so the survivors are stable under any partitioning or row
+    order, unlike rand().  ER blocking passes rank by xxhash64(id, seed);
+    the dedup operators rank by dedup._md5_rank, which a DuckDB oracle can
+    reproduce.  Returns (survivors, cap_metrics): one metrics row per capped
+    block, (block_key, block_size, cap, rows_dropped), with block_key the
+    block columns joined by "|".
     """
     from pyspark.sql.window import Window
 
-    ranked = df.withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.partitionBy(key).orderBy(F.xxhash64(id_col, F.lit(seed)), id_col)
-        ),
+    block = Window.partitionBy(*block_cols).orderBy(rank, F.col(id_col))
+    capped = (
+        df.withColumn("_rk", F.row_number().over(block))
+        .where(F.col("_rk") <= cap)
+        .drop("_rk")
     )
-    capped = ranked.where(F.col("_rk") <= cap).drop("_rk")
+    # the audit counts the unranked rows: partial aggregation ships one
+    # count per block and partition, where a count over the rank's window
+    # would shuffle and sort every row (measured on local[4], 2M rows in
+    # 200k blocks: 0.76 s as a groupBy vs 1.78 s as a window count)
     metrics = (
-        ranked.groupBy(key)
+        df.groupBy(*block_cols)
         .agg(F.count(F.lit(1)).alias("block_size"))
         .where(F.col("block_size") > cap)
         .select(
-            F.col(key).alias("block_key"),
-            F.col("block_size"),
+            F.concat_ws("|", *[F.col(c).cast("string") for c in block_cols]).alias(
+                "block_key"
+            ),
+            "block_size",
             F.lit(cap).alias("cap"),
             (F.col("block_size") - cap).alias("rows_dropped"),
         )
@@ -87,39 +88,79 @@ def _cap_block(
     return capped, metrics
 
 
-def _self_join_pairs(keyed: DataFrame, pass_name: str) -> DataFrame:
-    """Within-block cross product as a self equi-join on block_key."""
-    left = keyed.select(F.col("block_key"), F.col("conv_id").alias("l_id"))
-    right = keyed.select(F.col("block_key"), F.col("conv_id").alias("r_id"))
-    return _canonical_pairs(
-        left.join(right, "block_key").where(F.col("l_id") < F.col("r_id")),
-        pass_name,
-    )
+def _keyed_passes(docs: DataFrame, cfg: BlockingConfig):
+    """[(pass_name, keyed[conv_id, block_key], cap_metrics + block_pass)].
 
+    The one definition of every blocking key and its cap: candidate_pairs
+    self-joins the keyed frames on ids alone, fused.fused_scored_pairs joins
+    the doc payload onto them, so both forms block identically.
 
-def token_prefix_pass(docs: DataFrame, cfg: BlockingConfig) -> DataFrame:
-    keyed = docs.select(
-        "conv_id",
-        F.substring("doc_text", 1, cfg.token_prefix_len).alias("block_key"),
-    ).where(F.length("block_key") > 0)
-    capped, metrics = _cap_block(keyed, "block_key", cfg.block_cap, cfg.seed)
-    return _self_join_pairs(capped, "token"), metrics
+      token     : prefix of the normalized doc_text
+      signature : sha1 of the role/tool multiset + turn-count bucket
+      minhash   : ``band_idx#band_key`` of a token-MinHash LSH band
 
+    Native banded MinHash (token explode -> salted-min signature -> band
+    key) rather than Spark ML's MinHashLSH: the ML variant pays vector-UDT
+    construction plus an approxSimilarityJoin whose explode dominated the
+    blocking stage (~6x this pass's cost at bench scale).  Token-level:
+    near-duplicate conversations keep a nearly identical token SET under
+    word swaps/insertions, and tokens are ~10-30x fewer than char shingles
+    (char-shingle MinHash stays in dedup.py).  array_distinct before the
+    explode: min() is duplicate-invariant, so the signatures are identical
+    while the exploded rows (each paying n_hashes xxhash64 evals) shrink by
+    the per-doc token repetition factor.  Band
+    buckets are capped like every other block (md5-ranked, as in
+    dedup.minhash_band_pairs), so a boilerplate token set shared by
+    thousands of docs cannot explode the self-join.
+    """
+    from .dedup import _md5_rank, minhash_band_index
 
-def signature_pass(docs: DataFrame, cfg: BlockingConfig) -> DataFrame:
-    keyed = docs.select(
-        "conv_id",
-        F.sha1(
-            F.concat_ws(
-                "|",
-                F.concat_ws(",", "roles"),
-                F.concat_ws(",", "tools"),
-                (F.col("n_turns") / 4).cast("int").cast("string"),
-            )
-        ).alias("block_key"),
-    )
-    capped, metrics = _cap_block(keyed, "block_key", cfg.block_cap, cfg.seed)
-    return _self_join_pairs(capped, "signature"), metrics
+    xx_rank = F.xxhash64("conv_id", F.lit(cfg.seed))
+    out = []
+    if "token" in cfg.passes:
+        keyed = docs.select(
+            "conv_id",
+            F.substring("doc_text", 1, cfg.token_prefix_len).alias("block_key"),
+        ).where(F.length("block_key") > 0)
+        out.append(
+            ("token", *cap_block(keyed, ["block_key"], "conv_id", cfg.block_cap, xx_rank))
+        )
+    if "signature" in cfg.passes:
+        keyed = docs.select(
+            "conv_id",
+            F.sha1(
+                F.concat_ws(
+                    "|",
+                    F.concat_ws(",", "roles"),
+                    F.concat_ws(",", "tools"),
+                    (F.col("n_turns") / 4).cast("int").cast("string"),
+                )
+            ).alias("block_key"),
+        )
+        out.append(
+            ("signature", *cap_block(keyed, ["block_key"], "conv_id", cfg.block_cap, xx_rank))
+        )
+    if "minhash" in cfg.passes:
+        n_hashes = cfg.minhash_tables * cfg.minhash_rows
+        exploded = docs.select("conv_id", F.explode(F.array_distinct("tokens")).alias("tok"))
+        sigs = exploded.groupBy("conv_id").agg(
+            *[
+                F.min(F.xxhash64(F.col("tok"), F.lit(i))).alias(f"h{i}")
+                for i in range(n_hashes)
+            ]
+        )
+        banded = minhash_band_index(
+            sigs, n_hashes=n_hashes, bands=cfg.minhash_tables, id_col="conv_id"
+        )
+        capped, m = cap_block(
+            banded, ["band_idx", "band_key"], "conv_id", cfg.block_cap,
+            _md5_rank("conv_id", cfg.seed),
+        )
+        keyed = capped.select(
+            "conv_id", F.concat_ws("#", "band_idx", "band_key").alias("block_key")
+        )
+        out.append(("minhash", keyed, m))
+    return [(name, keyed, m.withColumn("block_pass", F.lit(name))) for name, keyed, m in out]
 
 
 def clean_for_shingles(col: F.Column) -> F.Column:
@@ -152,80 +193,6 @@ def shingle_expr_cleaned(cleaned: F.Column, n: int) -> F.Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_expr_on(col: F.Column, n: int) -> F.Column:
-    """Distinct char n-grams of an arbitrary string Column (see shingle_expr).
-
-    NOTE: inlines the cleaning into the lambda — O(text) work per shingle
-    position.  Hot paths should materialize clean_for_shingles(col) once and
-    use shingle_expr_cleaned (see its docstring)."""
-    return shingle_expr_cleaned(clean_for_shingles(col), n)
-
-
-def shingle_expr(text_col: str, n: int) -> F.Column:
-    """Distinct char n-grams of the whitespace-stripped lowercase text.
-
-    Native equivalent of the reference's _char_ngrams
-    (src/feature_engineering_utils.py:71-78) — transform over sequence keeps
-    it inside codegen; no Python.
-    """
-    cleaned = f"regexp_replace(lower({text_col}), '\\\\s+', '')"
-    return F.expr(
-        f"case when length({cleaned}) >= {n} then "
-        f"array_distinct(transform(sequence(1, length({cleaned}) - {n} + 1),"
-        f" i -> substring({cleaned}, i, {n}))) else array() end"
-    )
-
-
-def minhash_pass(docs: DataFrame, cfg: BlockingConfig) -> tuple[DataFrame, DataFrame]:
-    """MinHash-LSH candidate pairs over doc_text char shingles.
-
-    Native banded implementation (shingle explode -> salted-min signature ->
-    band-key self-join) rather than Spark ML's MinHashLSH: the ML variant
-    pays vector-UDT construction plus an approxSimilarityJoin whose explode
-    dominated the blocking stage (~6x this pass's cost at bench scale).
-    xxhash64 signatures keep the whole pass in whole-stage codegen.
-    Band keys are themselves skew-capped (a boilerplate shingle shared by
-    thousands of docs would otherwise quadratically explode the self-join).
-    """
-    from .dedup import minhash_band_pairs
-
-    n_hashes = cfg.minhash_tables * cfg.minhash_rows
-    # token-level minhash: near-duplicate conversations keep a nearly
-    # identical token SET even under word swaps/insertions, and tokens are
-    # ~10-30x fewer than char shingles — the explode volume (rows x hashes)
-    # drops accordingly.  Char-shingle minhash remains in dedup.py where
-    # sub-token granularity matters.
-    # array_distinct before the explode: min() is duplicate-invariant, so
-    # the signatures are IDENTICAL while the exploded row count (each row
-    # pays n_hashes xxhash64 evals in the partial agg) drops by the per-doc
-    # token repetition factor (guide §2.3: aggregate before you shuffle)
-    exploded = docs.select("conv_id", F.explode(F.array_distinct("tokens")).alias("tok"))
-    sigs = exploded.groupBy("conv_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("tok"), F.lit(i))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    pairs, metrics = minhash_band_pairs(
-        sigs,
-        n_hashes=n_hashes,
-        bands=cfg.minhash_tables,
-        id_col="conv_id",
-        band_cap=cfg.block_cap,
-        cap_seed=cfg.seed,
-        return_metrics=True,
-    )
-    return (
-        pairs.select(
-            "left_id",
-            "right_id",
-            F.lit("minhash").alias("block_pass"),
-            F.lit("lsh").alias("block_key"),
-        ),
-        metrics,
-    )
-
-
 def candidate_pairs(docs: DataFrame, cfg: BlockingConfig | None = None) -> tuple[DataFrame, DataFrame]:
     """Union of all blocking passes, canonical + deduplicated.
 
@@ -233,31 +200,20 @@ def candidate_pairs(docs: DataFrame, cfg: BlockingConfig | None = None) -> tuple
     """
     cfg = cfg or BlockingConfig()
     docs = docs.persist()
-    all_pairs = []
-    all_metrics = []
-    if "token" in cfg.passes:
-        p, m = token_prefix_pass(docs, cfg)
-        all_pairs.append(p.drop("_m"))
-        all_metrics.append(m.withColumn("block_pass", F.lit("token")))
-    if "signature" in cfg.passes:
-        p, m = signature_pass(docs, cfg)
-        all_pairs.append(p)
-        all_metrics.append(m.withColumn("block_pass", F.lit("signature")))
-    if "minhash" in cfg.passes and cfg.minhash_enabled:
-        p, m = minhash_pass(docs, cfg)
-        all_pairs.append(p)
-        # band-bucket truncation joins the audit frame like every other
-        # skew cap — requesting the metrics also silences the library's
-        # unaudited-cap warning on its own internal hot path
-        all_metrics.append(m.withColumn("block_pass", F.lit("minhash")))
-    unioned = all_pairs[0]
-    for p in all_pairs[1:]:
-        unioned = unioned.unionByName(p)
-    pairs = (
-        unioned.groupBy("left_id", "right_id")
-        .agg(F.sort_array(F.collect_set("block_pass")).alias("block_passes"))
+    pairs, metrics = [], []
+    for pass_name, keyed, m in _keyed_passes(docs, cfg):
+        l = keyed.select("block_key", F.col("conv_id").alias("left_id"))
+        r = keyed.select("block_key", F.col("conv_id").alias("right_id"))
+        pairs.append(
+            l.join(r, "block_key")
+            .where(F.col("left_id") < F.col("right_id"))
+            .select("left_id", "right_id", F.lit(pass_name).alias("block_pass"))
+        )
+        metrics.append(m)
+    unioned = reduce(DataFrame.unionByName, pairs)
+    return (
+        unioned.groupBy("left_id", "right_id").agg(
+            F.sort_array(F.collect_set("block_pass")).alias("block_passes")
+        ),
+        reduce(DataFrame.unionByName, metrics),
     )
-    metrics = all_metrics[0]
-    for m in all_metrics[1:]:
-        metrics = metrics.unionByName(m)
-    return pairs, metrics

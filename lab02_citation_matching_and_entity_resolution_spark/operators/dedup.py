@@ -31,7 +31,7 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocking import clean_for_shingles, shingle_expr_cleaned  # noqa: F401 (re-export compat)
+from .blocking import cap_block, clean_for_shingles, shingle_expr_cleaned
 
 CAP_METRICS_SCHEMA = "block_key string, block_size long, cap int, rows_dropped long"
 
@@ -85,39 +85,6 @@ def _md5_rank(id_col: str, cap_seed: int) -> F.Column:
     md5 (not xxhash64) so a DuckDB oracle applying the same cap reproduces
     the exact survivor set; stable under any partitioning."""
     return F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"#{cap_seed}")))
-
-
-def _cap_block(
-    df: DataFrame,
-    block_cols: list[str],
-    id_col: str,
-    cap: int,
-    cap_seed: int,
-) -> tuple[DataFrame, DataFrame]:
-    """row_number()<=cap inside each block, md5(id)-ranked; returns
-    (survivors, metrics-of-capped-blocks). Shared skew-cap discipline for
-    every self-joining dedup operator — a hot block (boilerplate text, one
-    dominant language slice) otherwise goes quadratic at corpus scale."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy(*block_cols).orderBy(
-        _md5_rank(id_col, cap_seed), F.col(id_col)
-    )
-    ranked = df.withColumn("_rk", F.row_number().over(w))
-    metrics = (
-        ranked.groupBy(*block_cols)
-        .agg(F.count(F.lit(1)).alias("block_size"))
-        .where(F.col("block_size") > cap)
-        .select(
-            F.concat_ws("|", *[F.col(c).cast("string") for c in block_cols]).alias(
-                "block_key"
-            ),
-            "block_size",
-            F.lit(cap).alias("cap"),
-            (F.col("block_size") - cap).alias("rows_dropped"),
-        )
-    )
-    return ranked.where(F.col("_rk") <= cap).drop("_rk"), metrics
 
 
 def _warn_cap_unaudited(op: str, cap: int, param: str = "block_cap") -> None:
@@ -179,7 +146,9 @@ def ngram_jaccard_pairs(
     )
     metrics = None
     if block_cap is not None:
-        sh, metrics = _cap_block(sh, list(block_cols), id_col, block_cap, cap_seed)
+        sh, metrics = cap_block(
+            sh, list(block_cols), id_col, block_cap, _md5_rank(id_col, cap_seed)
+        )
         if not return_metrics:
             _warn_cap_unaudited("ngram_jaccard_pairs", block_cap)
     a = sh.select(*block_cols, F.col(id_col).alias("left_id"), F.col("sh").alias("sha"))
@@ -296,11 +265,11 @@ def incremental_band_pairs(
     corpus_keyed = corpus_index
     metrics = None
     if band_cap is not None:
-        new_keyed, m_new = _cap_block(
-            new_keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
+        new_keyed, m_new = cap_block(
+            new_keyed, ["band_idx", "band_key"], id_col, band_cap, _md5_rank(id_col, cap_seed)
         )
-        corpus_keyed, m_corp = _cap_block(
-            corpus_keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
+        corpus_keyed, m_corp = cap_block(
+            corpus_keyed, ["band_idx", "band_key"], id_col, band_cap, _md5_rank(id_col, cap_seed)
         )
         metrics = m_new.unionByName(m_corp)
         if not return_metrics:
@@ -345,8 +314,8 @@ def minhash_band_pairs(
     keyed = minhash_band_index(signatures, n_hashes=n_hashes, bands=bands, id_col=id_col)
     metrics = None
     if band_cap is not None:
-        keyed, metrics = _cap_block(
-            keyed, ["band_idx", "band_key"], id_col, band_cap, cap_seed
+        keyed, metrics = cap_block(
+            keyed, ["band_idx", "band_key"], id_col, band_cap, _md5_rank(id_col, cap_seed)
         )
         if not return_metrics:
             _warn_cap_unaudited("minhash_band_pairs", band_cap, "band_cap")
@@ -467,8 +436,8 @@ def simhash_band_pairs(
     )
     metrics = None
     if block_cap is not None:
-        keyed, metrics = _cap_block(
-            keyed, ["band_idx", "band_key"], id_col, block_cap, cap_seed
+        keyed, metrics = cap_block(
+            keyed, ["band_idx", "band_key"], id_col, block_cap, _md5_rank(id_col, cap_seed)
         )
         if not return_metrics:
             _warn_cap_unaudited("simhash_band_pairs", block_cap, "band_cap")
@@ -529,7 +498,9 @@ def simhash_near_pairs(
     )
     metrics = None
     if block_cap is not None:
-        keyed, metrics = _cap_block(keyed, ["block"], id_col, block_cap, cap_seed)
+        keyed, metrics = cap_block(
+            keyed, ["block"], id_col, block_cap, _md5_rank(id_col, cap_seed)
+        )
         if not return_metrics:
             _warn_cap_unaudited("simhash_near_pairs", block_cap)
     a = keyed.select(F.col(id_col).alias("left_id"), F.col("simhash").alias("sa"), "block")

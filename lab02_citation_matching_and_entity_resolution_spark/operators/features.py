@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
-from .blocking import shingle_expr
+from .blocking import clean_for_shingles, shingle_expr_cleaned
+from .tfidf import doc_tfidf_maps, hashed_key_maps
 
 YEAR_DIFF_SENTINEL = 100  # ref: src/feature_engineering_utils.py:198
 
@@ -161,8 +162,8 @@ def char_ngram_jaccard_cols(a_text: str, b_text: str, n: int) -> Column:
     Uses the same native shingler as the MinHash pass — one implementation of
     the n-gram semantics for blocking and features.
     """
-    a_sh = shingle_expr(a_text, n)
-    b_sh = shingle_expr(b_text, n)
+    a_sh = shingle_expr_cleaned(clean_for_shingles(F.col(a_text)), n)
+    b_sh = shingle_expr_cleaned(clean_for_shingles(F.col(b_text)), n)
     return F.when((F.size(a_sh) == 0) | (F.size(b_sh) == 0), F.lit(0.0)).otherwise(
         F.size(F.array_intersect(a_sh, b_sh)) / F.size(F.array_union(a_sh, b_sh))
     )
@@ -292,7 +293,6 @@ def doc_payload(docs: DataFrame) -> DataFrame:
     pair rows at ~4 KB compressed each (21.9 GB shuffle for 5.5M pairs), and
     the text was a leading term.
     """
-    from .blocking import clean_for_shingles, shingle_expr_cleaned
 
     def hashed(arr: Column) -> Column:
         return F.transform(arr, lambda s: F.xxhash64(s))
@@ -345,13 +345,46 @@ def prefixed_payload(
     )
 
 
+def scoring_payload(
+    docs: DataFrame,
+    vectors: bool = True,
+    scope_cols: tuple[str, ...] | None = None,
+    persist: bool = True,
+) -> DataFrame:
+    """doc_payload plus, with ``vectors``, each doc's TF-IDF vector
+    (terms/weights/vec) — the per-doc input of both scoring forms
+    (pair_features and fused.fused_scored_pairs).
+
+    Left join: token-less docs keep NULL vectors and the cosine coalesces
+    them to 0.0, the same semantics as pair_tfidf_cosine's left joins.  Term
+    keys ship xxhash64-encoded (tfidf.hashed_key_maps): the vector columns
+    are the widest part of the rows the scoring joins shuffle, and the dot
+    only does exact-match lookups.
+
+    ``persist`` caches the result so every join branch reads one
+    materialization.  Without it, column pruning projects the l side to
+    (payload, terms, weights) and the r side to (payload, vec) below their
+    exchanges, the subplans stop being equal, ReuseExchange cannot fire,
+    and the doc-side payload+TF-IDF pipeline (4 aggregations + join) runs
+    once per branch (round-7 event-log capture: ~15 serialized AQE query
+    stages of 2-9 s each on the 4x corpus).  Disable it for corpora whose
+    per-doc payload exceeds executor storage (the recompute is correct,
+    just slower).
+    """
+    pay = doc_payload(docs)
+    if vectors:
+        pay = pay.join(
+            hashed_key_maps(doc_tfidf_maps(docs, scope_cols=scope_cols)), "conv_id", "left"
+        )
+    return pay.persist() if persist else pay
+
+
 def pair_features(
     pairs: DataFrame,
     docs: DataFrame,
     attach_tfidf: bool = True,
     tfidf_scope_cols: tuple[str, ...] | None = None,
     persist_payload: bool = True,
-    hash_vec_keys: bool = True,
 ) -> DataFrame:
     """Attach the full feature vector to candidate pairs.
 
@@ -383,37 +416,12 @@ def pair_features(
     # the pair side unsorted: measured 2-2.9x on the full-feature path at
     # 5.5M pairs.  The build side per task is docs_rows/shuffle_partitions x
     # ~12 KB — trivially in-memory at any realistic partitioning.
-    pay = doc_payload(docs)
     # vectors ride along only for the global fit (the hot-path default);
     # a scoped fit (tfidf_scope_cols) or attach_tfidf=False skips the maps
     # join entirely and pair_tfidf_cosine falls back to its own joins
     ship_tfidf = attach_tfidf and tfidf_scope_cols is None
-    l_extra, r_extra = [], []
-    if ship_tfidf:
-        from .tfidf import doc_tfidf_maps, hashed_key_maps
-
-        # left join: token-less docs keep NULL vectors; the cosine coalesces
-        # them to 0.0 — identical semantics to pair_tfidf_cosine's left joins.
-        # hash_vec_keys (production default) ships int64 term keys instead of
-        # strings — see tfidf.hashed_key_maps; False keeps the string-keyed
-        # ride for the bit-parity witness test.
-        tw = doc_tfidf_maps(docs)
-        if hash_vec_keys:
-            tw = hashed_key_maps(tw)
-        pay = pay.join(tw, "conv_id", "left")
-        l_extra, r_extra = ["terms", "weights"], ["vec"]
-    if persist_payload:
-        # one materialization feeds BOTH join sides.  Without it, column
-        # pruning projects the l side to (payload, terms, weights) and the
-        # r side to (payload, vec) BELOW their exchanges, the two subplans
-        # stop being equal, ReuseExchange cannot fire, and the whole
-        # doc-side payload+TF-IDF pipeline (4 aggregations + join) runs
-        # TWICE as ~15 serialized AQE query stages (round-7 event-log
-        # capture: 2-9 s per stage on the 4x corpus).  Same discipline and
-        # same caveat as fused_scored_pairs' persist_payload: disable for
-        # corpora where the per-doc payload exceeds executor storage (the
-        # recompute is correct, just slower).
-        pay = pay.persist()
+    pay = scoring_payload(docs, vectors=ship_tfidf, persist=persist_payload)
+    l_extra, r_extra = (["terms", "weights"], ["vec"]) if ship_tfidf else ([], [])
     joined = pairs.join(
         prefixed_payload(pay, "l", "left_id", extra_cols=l_extra).hint("shuffle_hash"),
         "left_id",

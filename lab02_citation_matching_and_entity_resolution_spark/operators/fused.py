@@ -20,17 +20,21 @@ This operator computes the SAME features at block-self-join time instead:
       -> one groupBy(left, right) dedups across passes/bands and collects
          block_passes
 
-Measured duplication (docs scored once per shared pass/band occurrence,
-deduped after): occurrences / distinct pairs = 1.18x at n_base=6000 — the
-redundant compute is 18%, the shuffle saved is >10x (the block-key shuffle
-moves each doc once per block: token 1x + signature 1x + minhash bands 6x
-vs ~77x per-pair replication).
+Duplication (a pair is scored once per shared pass/band occurrence and
+deduped after) depends on cluster density, so it has no fixed value:
+occurrences / distinct pairs was 1.18x at n_base=6000 with the default
+small clusters, and 5.7-7.2x (fused.passes_per_pair) on the dense-cluster
+er_dense benchmark workload.  The shuffle saved still dominates: the
+block-key shuffle moves each doc once per block membership (token 1x +
+signature 1x + minhash bands 6x) instead of once per pair.
 
 Pair-set, feature, and score parity with the classic path is exact by
-construction (same _cap_block rankings, same canonical l<r rule, same
-feature expressions via features.with_pair_feature_columns, same
-score_pairs_rule) and pinned by tests/test_fused_scoring.py, which asserts
-bit-identical frames on a synthetic corpus.
+construction (the same blocking._keyed_passes keys and caps, same canonical
+l<r rule, same payload via features.scoring_payload, same feature
+expressions via features.with_pair_feature_columns, same TF-IDF dot via
+tfidf.tfidf_cosine_col, same score_pairs_rule) and pinned by
+tests/test_fused_scoring.py, which asserts bit-identical frames on a
+synthetic corpus.
 
 Reference analogue: the notebooks score candidates inside each paper-block
 loop (ref: notebooks/match_and_fe.ipynb, src/match_utils.py:427-495) —
@@ -40,86 +44,24 @@ the translation artifact.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocking import BlockingConfig, _cap_block as _cap_block_xx
-from .dedup import (
-    CAP_METRICS_SCHEMA,
-    _cap_block as _cap_block_md5,
-    minhash_band_index,
-)
+from .blocking import BlockingConfig, _keyed_passes
 from .features import (
     FEATURE_COLS,
-    doc_payload,
     prefixed_payload,
+    scoring_payload,
     with_pair_feature_columns,
 )
 from .scoring import score_pairs_rule
-from .tfidf import doc_tfidf_maps, hashed_key_maps
+from .tfidf import tfidf_cosine_col
 
 # slim output carried per scored pair (everything downstream needs; no
 # payload arrays survive past the scoring stage)
 SCORED_COLS = [*FEATURE_COLS, "tfidf_cosine", "score", "reason"]
-
-# the same fold pair_tfidf_cosine uses: O(|l_terms|) map lookups, codegen
-_TFIDF_DOT = (
-    "aggregate(zip_with(l_terms, l_weights,"
-    " (t, w) -> w * coalesce(element_at(r_vec, t), 0D)),"
-    " 0D, (acc, x) -> acc + x)"
-)
-
-
-def _keyed_passes(docs: DataFrame, cfg: BlockingConfig):
-    """[(pass_name, keyed(conv_id, block_key), cap_metrics)] — the identical
-    keys, caps, and rankings blocking.candidate_pairs uses, so the fused
-    pair set matches the classic one exactly."""
-    out = []
-    if "token" in cfg.passes:
-        keyed = docs.select(
-            "conv_id",
-            F.substring("doc_text", 1, cfg.token_prefix_len).alias("block_key"),
-        ).where(F.length("block_key") > 0)
-        capped, m = _cap_block_xx(keyed, "block_key", cfg.block_cap, cfg.seed)
-        out.append(("token", capped, m.withColumn("block_pass", F.lit("token"))))
-    if "signature" in cfg.passes:
-        keyed = docs.select(
-            "conv_id",
-            F.sha1(
-                F.concat_ws(
-                    "|",
-                    F.concat_ws(",", "roles"),
-                    F.concat_ws(",", "tools"),
-                    (F.col("n_turns") / 4).cast("int").cast("string"),
-                )
-            ).alias("block_key"),
-        )
-        capped, m = _cap_block_xx(keyed, "block_key", cfg.block_cap, cfg.seed)
-        out.append(("signature", capped, m.withColumn("block_pass", F.lit("signature"))))
-    if "minhash" in cfg.passes and cfg.minhash_enabled:
-        n_hashes = cfg.minhash_tables * cfg.minhash_rows
-        # array_distinct: min() is duplicate-invariant — identical
-        # signatures, fewer exploded rows (same change as blocking.minhash_pass)
-        exploded = docs.select(
-            "conv_id", F.explode(F.array_distinct("tokens")).alias("tok")
-        )
-        sigs = exploded.groupBy("conv_id").agg(
-            *[
-                F.min(F.xxhash64(F.col("tok"), F.lit(i))).alias(f"h{i}")
-                for i in range(n_hashes)
-            ]
-        )
-        keyed = minhash_band_index(
-            sigs, n_hashes=n_hashes, bands=cfg.minhash_tables, id_col="conv_id"
-        )
-        capped, m = _cap_block_md5(
-            keyed, ["band_idx", "band_key"], "conv_id", cfg.block_cap, cfg.seed
-        )
-        capped = capped.select(
-            "conv_id", F.concat_ws("#", "band_idx", "band_key").alias("block_key")
-        )
-        out.append(("minhash", capped, m.withColumn("block_pass", F.lit("minhash"))))
-    return out
 
 
 def fused_scored_pairs(
@@ -154,21 +96,7 @@ def fused_scored_pairs(
     ``persist_payload``.
     """
     cfg = cfg or BlockingConfig()
-    spark = docs.sparkSession
-
-    # one payload per doc: feature inputs + TF-IDF terms/weights/vec (left
-    # join: token-less docs keep NULL vectors, the dot coalesces to 0.0 —
-    # same as pair_tfidf_cosine's left joins).  Term keys ship xxhash64-
-    # encoded (int64) — the vector columns are the widest part of the
-    # membership rows the block self-join shuffles, and the dot only does
-    # exact-match lookups (tfidf.hashed_key_maps; parity pinned by tests).
-    pay = doc_payload(docs).join(
-        hashed_key_maps(doc_tfidf_maps(docs, scope_cols=scope_cols)),
-        "conv_id",
-        "left",
-    )
-    if persist_payload:
-        pay = pay.persist()
+    pay = scoring_payload(docs, scope_cols=scope_cols, persist=persist_payload)
 
     scored_parts = []
     metrics_parts = []
@@ -198,7 +126,7 @@ def fused_scored_pairs(
             F.col("left_id") < F.col("right_id")
         )
         feat = with_pair_feature_columns(joined).withColumn(
-            "tfidf_cosine", F.coalesce(F.expr(_TFIDF_DOT), F.lit(0.0))
+            "tfidf_cosine", tfidf_cosine_col()
         )
         scored_parts.append(
             score_pairs_rule(feat).select(
@@ -209,9 +137,7 @@ def fused_scored_pairs(
             )
         )
 
-    unioned = scored_parts[0]
-    for p in scored_parts[1:]:
-        unioned = unioned.unionByName(p)
+    unioned = reduce(DataFrame.unionByName, scored_parts)
     # cross-pass/band dedup on SLIM rows: every occurrence of a pair carries
     # identical feature values (deterministic expressions over the same two
     # payloads), so first() is exact, not a tie-break
@@ -219,11 +145,4 @@ def fused_scored_pairs(
         F.sort_array(F.collect_set("block_pass")).alias("block_passes"),
         *[F.first(c).alias(c) for c in SCORED_COLS],
     )
-
-    if metrics_parts:
-        metrics = metrics_parts[0]
-        for m in metrics_parts[1:]:
-            metrics = metrics.unionByName(m)
-    else:
-        metrics = spark.createDataFrame([], CAP_METRICS_SCHEMA + ", block_pass string")
-    return scored, metrics
+    return scored, reduce(DataFrame.unionByName, metrics_parts)

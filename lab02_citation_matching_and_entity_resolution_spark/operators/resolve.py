@@ -81,7 +81,7 @@ def greedy_one_to_one(
                 f"max_block_pairs={max_block_pairs}. The blocking stage's skew "
                 "caps (reference 200x200, src/match_utils.py:592-595) bound "
                 "blocks far below this — cap candidate generation upstream "
-                "(blocking.candidate_pairs / _cap_block) or pass a larger "
+                "(blocking.candidate_pairs / cap_block) or pass a larger "
                 "max_block_pairs / None to certify this block is intentional."
             )
         return _greedy_block(pdf)

@@ -233,7 +233,7 @@ def word_ngrams_on(toks: F.Column, n: int) -> F.Column:
 def word_ngrams_col(text_col: str, n: int) -> F.Column:
     """Distinct-preserving word n-grams of a text column (space-joined),
     empty array when the doc has fewer than n words.  Native transform over
-    sequence — the word-level analogue of blocking.shingle_expr.
+    sequence — the word-level analogue of blocking.shingle_expr_cleaned.
 
     NOTE: inlines the tokenization into the slice lambda (O(words) per
     position).  Hot paths should materialize _words_col as a column and use

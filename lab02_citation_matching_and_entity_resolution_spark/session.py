@@ -18,6 +18,21 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 10_000
 
 
+def _mem_total_mb() -> int:
+    """Physical RAM in MB (equals MemTotal on Linux)."""
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (1024 * 1024)
+
+
+def default_driver_memory() -> str:
+    """About half of MemTotal, rounded down to 256 MB, at least 1 GB.
+
+    In local mode the driver heap is the executor heap, and the other half
+    of RAM is left to the Python workers and the OS page cache.  A fixed
+    size tuned on one machine can exceed the RAM of another and get the JVM
+    OOM-killed."""
+    return f"{max(1024, _mem_total_mb() // 2 // 256 * 256)}m"
+
+
 def get_spark(
     app_name: str = "lab02-er-spark",
     master: str | None = None,
@@ -54,6 +69,8 @@ def get_spark(
         "SPARK_GRAFT_JAVA_OPTS", "-XX:ReservedCodeCacheSize=512m"
     )
     method_split = os.environ.get("SPARK_GRAFT_CODEGEN_SPLIT", "128")
+    # single-JVM local mode: the driver heap IS the executor heap
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -70,20 +87,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS_PER_BATCH))
         .config("spark.sql.session.timeZone", "UTC")
-        # single-JVM local mode: the driver heap IS the executor heap; size it
-        # for 32 concurrent tasks (spills + GC thrash at 8g killed scaling)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
-    # shuffle/spill on tmpfs when available: the sandbox's virtual disk is
-    # slow enough to serialize shuffle-heavy stages (measured: local[32] no
-    # faster than local[8] with /tmp-backed shuffles); a real cluster has
-    # NVMe + network for this
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        builder = builder.config(
-            "spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", f"{shm}/spark-local")
-        )
+    # shuffle/spill directory: $SPARK_GRAFT_LOCAL_DIR, else Spark's default
+    # (java.io.tmpdir, or $SPARK_LOCAL_DIRS).  A tmpfs such as /dev/shm can be
+    # faster than a slow virtual disk but draws on the same RAM as the heap,
+    # so it is opt-in only.
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

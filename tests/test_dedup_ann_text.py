@@ -215,7 +215,7 @@ def test_embedding_near_dup_refuses_implicit_full_scan(spark):
 def test_simhash_block_cap_bounds_hot_bucket(spark):
     """Plant one degenerate bucket (identical boilerplate text -> one simhash
     block) and assert the cap bounds the pair blowup AND records metrics —
-    the same no-silent-truncation discipline as blocking/_cap_block."""
+    the same no-silent-truncation discipline as blocking.cap_block."""
     n = 40
     rows = [(i, "same boilerplate text shared by every doc") for i in range(n)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")

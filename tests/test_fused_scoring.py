@@ -133,15 +133,16 @@ def test_hashed_vec_keys_bit_parity(spark, docs):
     """The production ride-along TF-IDF vectors use xxhash64 int64 term keys
     (round-7: the term strings were the widest columns of the heavy second
     pair join's shuffle rows); the dot product is exact-match lookups only,
-    so the string-keyed ride must produce the BIT-IDENTICAL scored frame."""
+    so pair_tfidf_cosine's string-keyed join path (the one attach_tfidf=False
+    takes) must produce the BIT-IDENTICAL scored frame."""
     cfg = BlockingConfig()
     pairs, _ = candidate_pairs(docs, cfg)
     cols = ["left_id", "right_id", *SCORED_COLS]
     hashed = score_pairs_rule(
-        pair_tfidf_cosine(pair_features(pairs, docs, hash_vec_keys=True), docs)
+        pair_tfidf_cosine(pair_features(pairs, docs), docs)
     ).select(*cols)
     stringk = score_pairs_rule(
-        pair_tfidf_cosine(pair_features(pairs, docs, hash_vec_keys=False), docs)
+        pair_tfidf_cosine(pair_features(pairs, docs, attach_tfidf=False), docs)
     ).select(*cols)
     assert _rows(hashed) == _rows(stringk)
 

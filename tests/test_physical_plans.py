@@ -12,6 +12,25 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+def _executed_node_names(df) -> list[str]:
+    """Node names of the executed physical plan, walked as a tree.
+
+    The plan text repeats a cached lineage under every InMemoryRelation
+    that reads it; the walk does not, because InMemoryTableScan is a leaf.
+    AdaptiveSparkPlan is unwrapped to its current physical plan."""
+
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        children = node.children()
+        out = [node.nodeName()]
+        for i in range(children.length()):
+            out += walk(children.apply(i))
+        return out
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
     plan = _plan(REGISTRY["s2_filtered_scan"].fn(spark, sf_dir))
     assert "PushedFilters" in plan
@@ -76,14 +95,14 @@ def test_whole_stage_codegen_in_features(spark):
 
 
 def test_exchange_count_blocking_token_pass(spark):
-    """Token-prefix pass: one shuffle for the window cap + join reuses it —
-    no gratuitous extra exchanges."""
+    """Token-prefix pass alone: one shuffle for the window cap, the
+    self-join reuses its partitioning — no gratuitous extra exchanges."""
     from lab02_citation_matching_and_entity_resolution_spark.operators.assemble import (
         assemble_documents,
     )
     from lab02_citation_matching_and_entity_resolution_spark.operators.blocking import (
         BlockingConfig,
-        token_prefix_pass,
+        candidate_pairs,
     )
     from lab02_citation_matching_and_entity_resolution_spark.synth import (
         SynthConfig,
@@ -92,14 +111,39 @@ def test_exchange_count_blocking_token_pass(spark):
 
     tr = transcripts_df(spark, SynthConfig(n_base=6))
     docs = assemble_documents(tr)
-    pairs, _ = token_prefix_pass(docs, BlockingConfig())
-    # count EXECUTING exchanges in the plan tree only (the details section
-    # repeats every node name once more)
-    tree = _plan(pairs).split("\n\n")[0]
-    n_exchange = tree.count("- Exchange")
-    # expected: 1 shuffle for groupBy(conv_id) assembly, 1 for the window cap
-    # on block_key (both join sides reuse that partitioning)
-    assert n_exchange <= 4, tree
+    pairs, _ = candidate_pairs(docs, BlockingConfig(passes=("token",)))
+    # candidate_pairs persists docs, so the groupBy(conv_id) assembly
+    # shuffle sits in the cached lineage, which the walk does not count.
+    # expected: the window cap on block_key once per join side (identical
+    # exchanges; the join reuses their partitioning) and the cross-pass
+    # groupBy(left_id, right_id)
+    names = _executed_node_names(pairs)
+    assert names.count("Exchange") <= 4, names
+
+
+def test_fused_plan_exchange_count(spark):
+    """Pins the shape of the fused blocking+scoring plan: the number of
+    Exchange nodes it executes (cached docs and payload lineages excluded)
+    must not grow.  25 before the blocking core was merged: per pass and
+    join side, the cap window's shuffle on the block key, both sides of the
+    payload join on the id, and the self-join's block-key shuffle (8 per
+    pass), plus the cross-pass dedup on (left_id, right_id)."""
+    from lab02_citation_matching_and_entity_resolution_spark.operators.assemble import (
+        assemble_documents,
+    )
+    from lab02_citation_matching_and_entity_resolution_spark.operators.fused import (
+        fused_scored_pairs,
+    )
+    from lab02_citation_matching_and_entity_resolution_spark.synth import (
+        SynthConfig,
+        transcripts_df,
+    )
+
+    docs = assemble_documents(transcripts_df(spark, SynthConfig(n_base=6))).persist()
+    docs.count()
+    names = _executed_node_names(fused_scored_pairs(docs)[0])
+    assert names.count("Exchange") <= 25, names
+    docs.unpersist()
 
 
 def test_language_id_stays_jvm_side(spark, sf_dir):

@@ -123,10 +123,43 @@ def test_cap_metrics_no_silent_truncation(spark, corpus):
     )
 
     docs = assemble_documents(transcripts)
-    tiny_cap = BlockingConfig(block_cap=2, minhash_enabled=False)
+    tiny_cap = BlockingConfig(block_cap=2, passes=("token", "signature"))
     pairs, metrics = candidate_pairs(docs, tiny_cap)
     reported = metrics.agg(F.sum("rows_dropped")).collect()[0][0]
     assert reported is not None and reported > 0
+
+
+@pytest.mark.parametrize("rank_kind", ["xxhash64", "md5"])
+def test_cap_block_survivors_and_metrics(spark, rank_kind):
+    """The one skew-cap helper under both rank expressions (ER passes:
+    xxhash64; dedup operators: md5): blocks of size 1, cap and cap+3 keep
+    exactly the cap lowest-(rank, id) rows, and only the oversized block
+    gets an audit row."""
+    import hashlib
+
+    from lab02_citation_matching_and_entity_resolution_spark.operators.blocking import (
+        cap_block,
+    )
+    from lab02_citation_matching_and_entity_resolution_spark.operators.dedup import (
+        _md5_rank,
+    )
+
+    cap, seed = 4, 23120334
+    sizes = {"one": 1, "full": cap, "over": cap + 3}
+    rows = [(f"{blk}{i}", blk) for blk, n in sizes.items() for i in range(n)]
+    df = spark.createDataFrame(rows, "doc_id string, blk string")
+    if rank_kind == "xxhash64":
+        rank = F.xxhash64("doc_id", F.lit(seed))
+        key = {r["doc_id"]: r["h"] for r in df.select("doc_id", rank.alias("h")).collect()}
+    else:
+        rank = _md5_rank("doc_id", seed)
+        key = {i: hashlib.md5(f"{i}#{seed}".encode()).hexdigest() for i, _ in rows}
+    capped, metrics = cap_block(df, ["blk"], "doc_id", cap, rank)
+
+    over = sorted((i for i, b in rows if b == "over"), key=lambda i: (key[i], i))
+    want = {i for i, b in rows if b != "over"} | set(over[:cap])
+    assert {r["doc_id"] for r in capped.collect()} == want
+    assert [tuple(r) for r in metrics.collect()] == [("over", cap + 3, cap, 3)]
 
 
 def test_distributed_synth_identical_to_driver(spark):
